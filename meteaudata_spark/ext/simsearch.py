@@ -1658,9 +1658,29 @@ def _ivfpq_encode(q: DataFrame, cb_arr: DataFrame, rcb_arr: DataFrame) -> DataFr
     )
 
 
-def _ivfpq_encode_arrow(
-    q: DataFrame, cb_arr: DataFrame, rcb_arr: DataFrame
-) -> DataFrame:
+def _ivfpq_books(coarse: DataFrame, rcb: DataFrame):
+    """Collect the two frozen codebooks (16 + 8×16 rows) to numpy:
+    ``(centroid_ids, centroids, code_ids, codebook)`` with the coarse
+    centroids as an int64 [list, 64] matrix and the residual PQ
+    codebook as an int64 [sub, code, 8] array, both sorted by id so
+    that an argmin's first index is the lowest id — ``array_min``'s
+    (dist, id) tie-break."""
+    import numpy as np
+
+    cb = sorted((r["centroid_id"], r["ce"]) for r in coarse.collect())
+    rows = sorted((r["sub_id"], r["code"], r["cvec"]) for r in rcb.collect())
+    code_ids = np.array([c for s, c, _ in rows if s == rows[0][0]], dtype=np.int64)
+    return (
+        np.array([c for c, _ in cb], dtype=np.int64),
+        np.array([ce for _, ce in cb], dtype=np.int64),
+        code_ids,
+        np.array([v for _, _, v in rows], dtype=np.int64).reshape(
+            _PQ_SUBS, len(code_ids), _PQ_SUBDIM
+        ),
+    )
+
+
+def _ivfpq_encode_arrow(q: DataFrame, books) -> DataFrame:
     """Arrow-vectorized twin of ``_ivfpq_encode`` for the hot append
     path: the same frozen-codebook encode as one NumPy GEMM per batch
     instead of an expression fold per (row, sub, code) candidate —
@@ -1671,21 +1691,17 @@ def _ivfpq_encode_arrow(
     tests/test_r14_ops.py): every quantity is an integer below 2⁵³
     (|q| ≤ 2²⁰ → x·c ≤ 2⁴⁰, 64-dim sums < 2⁴⁷), so float64 GEMM
     accumulation is exact in any order; ``argmin`` keeps the FIRST
-    (= lowest id, both codebook arrays pre-sorted) index on ties —
-    exactly ``array_min``'s (dist, id) struct ordering.  The two
-    codebooks are collected once (16 + 8×16 rows, bounded) and ride
+    (= lowest id, ``_ivfpq_books`` sorts both codebooks) index on
+    ties — exactly ``array_min``'s (dist, id) struct ordering.
+    ``books`` are the numpy codebooks of ``_ivfpq_books``; they ride
     in the UDF closure."""
     import numpy as np
 
-    cb = cb_arr.collect()[0]["cb"]
-    cids = np.array([c["centroid_id"] for c in cb], dtype=np.int64)
-    C = np.array([list(c["ce"]) for c in cb], dtype=np.float64)
-    subcb = {}
-    for r in rcb_arr.collect():
-        codes = np.array([c["code"] for c in r["cb"]], dtype=np.int64)
-        M = np.array([list(c["cvec"]) for c in r["cb"]], dtype=np.float64)
-        subcb[int(r["sub_id"])] = (codes, M, (M * M).sum(axis=1))
+    cids, cents, code_ids, rcb = books
+    C = cents.astype(np.float64)
     c_sq = (C * C).sum(axis=1)
+    M = rcb.astype(np.float64)
+    m_sq = (M * M).sum(axis=2)
     dim = C.shape[1]
     n_subs = _PQ_SUBS
     subdim = _PQ_SUBDIM
@@ -1718,14 +1734,13 @@ def _ivfpq_encode_arrow(
             out_sub = np.tile(np.arange(n_subs, dtype=np.int64), n)
             out_code = np.empty(n * n_subs, dtype=np.int64)
             for s in range(n_subs):
-                codes, M, m_sq = subcb[s]
                 R = resid[:, s * subdim : (s + 1) * subdim]
                 ds = (
                     (R * R).sum(axis=1, keepdims=True)
-                    - 2.0 * (R @ M.T)
-                    + m_sq
+                    - 2.0 * (R @ M[s].T)
+                    + m_sq[s]
                 )
-                out_code[s::n_subs] = codes[ds.argmin(axis=1)]
+                out_code[s::n_subs] = code_ids[ds.argmin(axis=1)]
             yield pa.record_batch(
                 [
                     pa.array(out_vid),
@@ -1769,80 +1784,83 @@ def _ivfpq_index(emb: DataFrame):
     return coarse, rcb, codes
 
 
-def _ivfpq_search_relations(
-    coarse: DataFrame,
-    rcb: DataFrame,
-    codes: DataFrame,
-    qv: DataFrame,
-    k: int,
-    n_probe: int,
+def _ivfpq_search_codes(
+    codes: DataFrame, books, query_emb: DataFrame, k: int, n_probe: int
 ) -> DataFrame:
-    """Search side of IVF-PQ over prebuilt index relations.  ``qv``
-    has (query_id, q_qe) with q_qe the 2²⁰-quantized query vector."""
-    qdist = _PQ_SQDIST.format(a="q_qe", b="ce")
-    probes = (
-        qv.crossJoin(F.broadcast(coarse))
-        .withColumn("__cd", F.expr(qdist))
-        .withColumn(
-            "__rk",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    "__cd", "centroid_id"
-                )
-            ),
+    """The IVF-PQ search core: (query_id, vec_id, approx_sqdist, rank)
+    of the top-``k`` ``codes`` rows for every (vec_id, embedding) row
+    of ``query_emb`` under the numpy codebooks ``books``; a query never
+    matches its own vec_id.  The query batch is collected once and
+    quantized with ``_q64``'s rule; probes (ties to the lower
+    centroid_id) and one LUT per (query, probed list) are computed
+    here.  The returned frame is lazy: a literal ``centroid_id IN``
+    filter (directory pruning), a numpy ``mapInArrow`` scorer summing
+    LUT lookups per (query, vec_id) and batch, then one exchange on
+    query_id, a sum over batches and files, and a rank window by
+    (approx_sqdist, vec_id) — two Spark jobs under AQE."""
+    import numpy as np
+
+    cids, cents, code_ids, rcb = books
+    rows = query_emb.select("vec_id", "embedding").collect()
+    if not rows:
+        return codes.sparkSession.createDataFrame(
+            [], "query_id BIGINT, vec_id BIGINT, approx_sqdist BIGINT, rank BIGINT"
         )
-        .filter(F.col("__rk") <= n_probe)
-        .select(
-            "query_id",
-            "centroid_id",
-            F.expr("zip_with(q_qe, ce, (a, b) -> a - b)").alias("q_resid"),
-        )
-    )
-    # per (query, probed list): LUT of the query residual vs codebook
-    q_rsubs = probes.select(
-        "query_id",
-        "centroid_id",
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, {_PQ_SUBS - 1}), "
-                f"s -> struct(s AS sub_id, slice(q_resid, s * {_PQ_SUBDIM} + 1, {_PQ_SUBDIM}) AS rv))"
+    qids = np.array([r[0] for r in rows], dtype=np.int64)
+    x = np.array([r[1] for r in rows], dtype=np.float64) * _PQ_Q
+    # Spark's round(): half away from zero (np.round is half-even)
+    qq = (np.sign(x) * np.floor(np.abs(x) + 0.5)).astype(np.int64)
+    # centroids are id-sorted, so a stable sort breaks distance ties
+    # by centroid_id
+    cd = ((qq[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
+    probed = np.argsort(cd, axis=1, kind="stable")[:, :n_probe]
+    pair_q = np.repeat(np.arange(len(qids)), probed.shape[1])
+    pair_c = probed.ravel()
+    resid = (qq[pair_q] - cents[pair_c]).reshape(-1, _PQ_SUBS, 1, _PQ_SUBDIM)
+    luts = ((resid - rcb[None]) ** 2).sum(axis=3)  # [pair, sub, code]
+    pair_qid, pair_cid = qids[pair_q], cids[pair_c]
+
+    def score(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            vid, sub, code, cid = (
+                c.to_numpy(zero_copy_only=False) for c in batch.columns
             )
-        ).alias("sv"),
-    ).select(
-        "query_id",
-        "centroid_id",
-        F.col("sv.sub_id").cast("bigint").alias("sub_id"),
-        F.col("sv.rv").alias("rv"),
-    )
-    lut = q_rsubs.join(rcb, "sub_id").select(
-        "query_id",
-        "centroid_id",
-        "sub_id",
-        "code",
-        F.expr(_PQ_SQDIST.format(a="rv", b="cvec")).alias("lut_dist"),
-    )
+            ci = np.searchsorted(code_ids, code)
+            out = []
+            for p in range(len(pair_qid)):
+                m = (cid == pair_cid[p]) & (vid != pair_qid[p])
+                if not m.any():
+                    continue
+                u, inv = np.unique(vid[m], return_inverse=True)
+                d = np.zeros(len(u), dtype=np.int64)
+                np.add.at(d, inv, luts[p, sub[m], ci[m]])
+                out.append((np.full(len(u), pair_qid[p]), u, d))
+            if out:
+                yield pa.record_batch(
+                    [pa.array(np.concatenate(c)) for c in zip(*out)],
+                    names=["query_id", "vec_id", "approx_sqdist"],
+                )
+
     scored = (
-        codes.join(F.broadcast(lut), ["centroid_id", "sub_id", "code"])
-        .filter(F.col("vec_id") != F.col("query_id"))
+        codes.filter(F.col("centroid_id").isin(sorted(set(pair_cid.tolist()))))
+        .select("vec_id", "sub_id", "code", "centroid_id")
+        .mapInArrow(score, "query_id BIGINT, vec_id BIGINT, approx_sqdist BIGINT")
+        # the one exchange: the sum and the rank window below are both
+        # keyed by query_id first, so neither needs another
+        .repartition("query_id")
         .groupBy("query_id", "vec_id")
-        .agg(F.sum("lut_dist").alias("approx_sqdist"))
+        .agg(F.sum("approx_sqdist").alias("approx_sqdist"))
     )
     ranked = scored.withColumn(
         "rank",
         F.row_number().over(
-            Window.partitionBy("query_id").orderBy(
-                "approx_sqdist", F.col("vec_id")
-            )
+            Window.partitionBy("query_id").orderBy("approx_sqdist", "vec_id")
         ),
     )
-    return (
-        ranked.filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "vec_id",
-            "approx_sqdist",
-            F.col("rank").cast("bigint").alias("rank"),
-        )
+    return ranked.filter(F.col("rank") <= k).select(
+        "query_id", "vec_id", "approx_sqdist", F.col("rank").cast("bigint").alias("rank")
     )
 
 
@@ -1850,22 +1868,26 @@ _DISK_CB_MEMO: dict = {}
 
 
 def _disk_codebooks(spark: SparkSession, path: str):
-    """Session-memoized loaders of a persisted index's FROZEN
-    codebooks (coarse + residual PQ) and their in-row array forms
-    (r15, guide §5 driver cost): every ``append_ivfpq_delta`` /
-    ``ivfpq_search`` call — one per STREAMING micro-batch — re-read
-    the two tiny parquet footers and rebuilt the array plans (~0.2 s
-    of driver work per batch).  Codebooks are frozen by the index
-    contract (appends/deletes never touch them); ``build_ivfpq_index``
-    invalidates the entry when it overwrites a path."""
+    """The persisted index's FROZEN codebooks as numpy
+    (``_ivfpq_books``), memoized per Spark application and path.
+    Every ``ivfpq_search`` picks its probes and builds its LUTs from
+    them, and every ``append_ivfpq_delta`` (one per streaming
+    micro-batch) encodes with them, so after the first call neither
+    reads the two parquet tables nor starts a Spark job for them.
+    Codebooks are frozen by the index contract (appends and deletes
+    never touch them); ``build_ivfpq_index`` drops the entry when it
+    overwrites a path."""
     key = (spark.sparkContext.applicationId, path)
     hit = _DISK_CB_MEMO.get(key)
     if hit is None:
-        coarse = spark.read.parquet(f"{path}/coarse")
-        rcb = spark.read.parquet(f"{path}/codebook")
-        cb_arr, rcb_arr = _ivfpq_cb_arrays(coarse, rcb)
-        hit = (coarse, rcb, cb_arr, rcb_arr)
-        _DISK_CB_MEMO[key] = hit
+        hit = _DISK_CB_MEMO[key] = _ivfpq_books(
+            spark.read.schema("centroid_id BIGINT, ce ARRAY<BIGINT>").parquet(
+                f"{path}/coarse"
+            ),
+            spark.read.schema(
+                "sub_id BIGINT, code BIGINT, cvec ARRAY<BIGINT>"
+            ).parquet(f"{path}/codebook"),
+        )
         while len(_DISK_CB_MEMO) > 16:
             _DISK_CB_MEMO.pop(next(iter(_DISK_CB_MEMO)))
     return hit
@@ -1891,24 +1913,26 @@ def ivfpq_topk(
       3. residual PQ codes: nearest residual-codebook entry per
          8-dim subspace (codebook = residual subvectors of
          vec_id < 16) — map-only after an 8-row broadcast.
-    Search (per query): probe the ``n_probe`` nearest coarse lists;
-    per probed list build the LUT of the query's OWN residual (w.r.t.
-    that list's centroid) against the codebook (n_queries·n_probe·8·16
-    rows — broadcast); a candidate's approximate distance is the sum
-    of 8 LUT lookups.  The corpus-side cost is one equi-join keyed on
-    centroid_id against only the probed lists + one slim keyed agg —
-    never a full scan, never a float.
+    Search (``_ivfpq_search_codes``, one pass for the whole query
+    batch): the driver collects the queries, picks each one's
+    ``n_probe`` nearest coarse lists and builds one LUT per (query,
+    probed list) — the query's OWN residual w.r.t. that list's
+    centroid against the codebook, 8×16 integers.  Only the probed
+    lists' codes are scanned; a numpy scorer sums each candidate's 8
+    LUT lookups, and one exchange keyed on query_id merges the sums
+    and ranks them — never a full scan, never a float.
 
     100 TB shape: lists partition the corpus (write them bucketed by
     ``centroid_id`` for exchange-free probes); codes are 8 slim rows
-    per vector; everything broadcast is O(centroids + LUT).
+    per vector; the codebooks and LUTs (queries·n_probe·8·16
+    integers) ride in the scorer's closure.
     Reference analog: none (pure [EXT]).
     """
     coarse, rcb, codes = _ivfpq_index(emb)
-    qv = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), _q64("embedding").alias("q_qe")
+    queries = emb.filter(F.col("vec_id") < n_queries)
+    return _ivfpq_search_codes(
+        codes, _ivfpq_books(coarse, rcb), queries, k, n_probe
     )
-    return _ivfpq_search_relations(coarse, rcb, codes, qv, k, n_probe)
 
 
 def build_ivfpq_index(emb: DataFrame, path: str) -> None:
@@ -1950,38 +1974,20 @@ def ivfpq_search(
 
     ``query_emb`` has (vec_id, embedding); results match the
     in-memory ``ivfpq_topk`` bit-for-bit (equality-tested).  The
-    codes scan carries the probed ``centroid_id`` partition filter,
-    so only n_probe/16 of the index files are read.  Raises if the
-    index carries a ``_delete_pending`` marker (a crashed
+    query batch is collected once, and probes and LUTs come from the
+    memoized numpy codebooks (``_disk_codebooks``).  The returned
+    frame (``_ivfpq_search_codes``) reads only the probed lists, with
+    an explicit schema, in two Spark jobs.  Raises if the index
+    carries a ``_delete_pending`` marker (a crashed
     ``delete_ivfpq_ids`` — see its docstring)."""
     _marker_check(spark, path)
-    # codebooks are frozen — session-memoized loaders (r15); the
-    # CODES relation grows with appends, so it is re-read per call
-    coarse, rcb, _cb, _rcb = _disk_codebooks(spark, path)
-    codes = spark.read.parquet(f"{path}/codes")
-    qv = query_emb.select(
-        F.col("vec_id").alias("query_id"), _q64("embedding").alias("q_qe")
+    # the CODES relation grows with appends, so it is re-read per call
+    codes = spark.read.schema(
+        "vec_id BIGINT, sub_id BIGINT, code BIGINT, centroid_id BIGINT"
+    ).parquet(f"{path}/codes")
+    return _ivfpq_search_codes(
+        codes, _disk_codebooks(spark, path), query_emb, k, n_probe
     )
-    # resolve probed lists first so the codes scan gets a literal
-    # IN-list partition filter (directory pruning, not a runtime join)
-    qdist = _PQ_SQDIST.format(a="q_qe", b="ce")
-    probed = (
-        qv.crossJoin(F.broadcast(coarse))
-        .withColumn("__cd", F.expr(qdist))
-        .withColumn(
-            "__rk",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy("__cd", "centroid_id")
-            ),
-        )
-        .filter(F.col("__rk") <= n_probe)
-        .select("centroid_id")
-        .distinct()
-        .collect()
-    )
-    probe_ids = sorted(r["centroid_id"] for r in probed)
-    codes = codes.filter(F.col("centroid_id").isin(probe_ids))
-    return _ivfpq_search_relations(coarse, rcb, codes, qv, k, n_probe)
 
 
 def _ivfpq_index_for(spark: SparkSession, sf_dir: str, variant: str = "full"):
@@ -2032,14 +2038,10 @@ def _ivfpq_search_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     is each gate row's own work and executes in the timed region on
     every call.  Only the INDEX relations it reads (coarse / rcb /
     codes, via ``_ivfpq_index_for``) are session-memoized artifacts."""
-    emb = _emb(spark, sf_dir)
     coarse, rcb, codes = _ivfpq_index_for(spark, sf_dir)
-    qv = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"),
-        _q64("embedding").alias("q_qe"),
-    )
-    return _ivfpq_search_relations(
-        coarse, rcb, codes, qv, _REFINE_C, _IVFPQ_NPROBE
+    queries = _emb(spark, sf_dir).filter(F.col("vec_id") < 3)
+    return _ivfpq_search_codes(
+        codes, _ivfpq_books(coarse, rcb), queries, _REFINE_C, _IVFPQ_NPROBE
     )
 
 
@@ -2066,7 +2068,8 @@ def append_ivfpq_delta(spark: SparkSession, path: str, delta_emb: DataFrame) -> 
     equivalence ``tests/test_r13_ops.py`` pins and the
     ``emb_ivfpq_delta_topk`` gate row certifies against DuckDB's
     independent full-rebuild oracle.  Cost is one map-only encode of
-    the delta (two tiny broadcasts) + an append of delta-sized
+    the delta (the memoized numpy codebooks of ``_disk_codebooks``
+    ride in the encoder's closure) + an append of delta-sized
     parquet — at 100 TB the delta never re-reads the corpus-sized
     codes relation, which a rebuild must.
 
@@ -2091,7 +2094,6 @@ def append_ivfpq_delta(spark: SparkSession, path: str, delta_emb: DataFrame) -> 
     maintenance pass — the small-files failure mode.  Periodic
     ``compact_ivfpq_lists`` keeps the per-list file count bounded."""
     _marker_check(spark, path)
-    coarse, rcb, cb_arr, rcb_arr = _disk_codebooks(spark, path)
     delta_ids = delta_emb.select("vec_id")
     existing = (
         spark.read.parquet(f"{path}/codes")
@@ -2104,7 +2106,7 @@ def append_ivfpq_delta(spark: SparkSession, path: str, delta_emb: DataFrame) -> 
     # Arrow-vectorized encode (bit-exact twin of _ivfpq_encode): the
     # expression fold evaluated 8×16 8-dim lambdas per row and made
     # micro-batch appends encode-bound
-    _ivfpq_encode_arrow(q, cb_arr, rcb_arr).repartition(
+    _ivfpq_encode_arrow(q, _disk_codebooks(spark, path)).repartition(
         "centroid_id"
     ).write.mode("append").partitionBy("centroid_id").parquet(
         f"{path}/codes"
@@ -2291,14 +2293,11 @@ def emb_ivfpq_delete_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     full-index relations shared with the topk row (the delete is a
     filter over the SAME codes relation — exactly the persisted-path
     semantics)."""
-    emb = _emb(spark, sf_dir)
     coarse, rcb, codes = _ivfpq_index_for(spark, sf_dir)
     dead = (F.col("vec_id") % 5 == 2) & (F.col("vec_id") >= 200)
-    qv = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), _q64("embedding").alias("q_qe")
-    )
-    return _ivfpq_search_relations(
-        coarse, rcb, codes.filter(~dead), qv, 10, _IVFPQ_NPROBE
+    queries = _emb(spark, sf_dir).filter(F.col("vec_id") < 3)
+    return _ivfpq_search_codes(
+        codes.filter(~dead), _ivfpq_books(coarse, rcb), queries, 10, _IVFPQ_NPROBE
     )
 
 
@@ -2306,23 +2305,18 @@ def _ivfpq_delta_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-memoized frozen-codebook delta encode (the 25% vector
     delta's code rows — an index-maintenance ARTIFACT exactly like
     the memoized base-index relations, guide §5 / VERDICT r14 #3
-    keep-list: "codes").  The 8-subspace residual explode ×
-    256-codeword argmin encodes once per session; warmable directly
-    so its one-time cost lands in ``warm_build_sec``."""
+    keep-list: "codes").  It runs the append path's encode
+    (``_ivfpq_encode_arrow``, as ``append_ivfpq_delta`` does) once per
+    session; warmable directly so its one-time cost lands in
+    ``warm_build_sec``."""
     from meteaudata_spark.plans.opcache import memo_relation
 
     def _build_delta():
         emb = _emb(spark, sf_dir)
         is_delta = (F.col("vec_id") % 4 == 3) & (F.col("vec_id") >= 200)
         coarse, rcb, _base = _ivfpq_index_for(spark, sf_dir, "base")
-        cb_arr, rcb_arr = _ivfpq_cb_arrays(coarse, rcb)
-        return _ivfpq_encode(
-            emb.filter(is_delta).select(
-                "vec_id", _q64("embedding").alias("qe")
-            ),
-            cb_arr,
-            rcb_arr,
-        )
+        q = emb.filter(is_delta).select("vec_id", _q64("embedding").alias("qe"))
+        return _ivfpq_encode_arrow(q, _ivfpq_books(coarse, rcb))
 
     return memo_relation(spark, ("ivfpq_codes_delta", sf_dir), _build_delta)
 
@@ -2334,13 +2328,12 @@ def emb_ivfpq_delta_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     match IS the incremental-equivalence certificate.  The base-index
     relations and the delta encode are session-memoized artifacts;
     the SEARCH over (base ∪ delta) executes per call (r15)."""
-    emb = _emb(spark, sf_dir)
     coarse, rcb, base_codes = _ivfpq_index_for(spark, sf_dir, "base")
     codes = base_codes.unionByName(_ivfpq_delta_codes(spark, sf_dir))
-    qv = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), _q64("embedding").alias("q_qe")
+    queries = _emb(spark, sf_dir).filter(F.col("vec_id") < 3)
+    return _ivfpq_search_codes(
+        codes, _ivfpq_books(coarse, rcb), queries, 10, _IVFPQ_NPROBE
     )
-    return _ivfpq_search_relations(coarse, rcb, codes, qv, 10, _IVFPQ_NPROBE)
 
 
 _PROBE_SWEEP = (1, 2, 4, 8)
@@ -2594,9 +2587,8 @@ def emb_ivfpq_refine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     qv = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), _q64("embedding").alias("q_qe")
     )
-    # r14: the PQ nomination stage is the session-memoized search
-    # core shared with emb_ivfpq_topk (same index, queries, probes,
-    # and candidate depth)
+    # the PQ nomination stage is the search core shared with
+    # emb_ivfpq_topk (same index, queries, probes, and candidate depth)
     cand = _ivfpq_search_core(spark, sf_dir)
     store = emb.select("vec_id", _q64("embedding").alias("qe"))
     exact = (

@@ -196,7 +196,7 @@ def test_ivfpq_arrow_encode_bit_identical_to_expression_encode(spark):
     q = emb.select("vec_id", ss._q64("embedding").alias("qe"))
     a = sorted(map(tuple, ss._ivfpq_encode(q, cb_arr, rcb_arr).collect()))
     b = sorted(
-        map(tuple, ss._ivfpq_encode_arrow(q, cb_arr, rcb_arr).collect())
+        map(tuple, ss._ivfpq_encode_arrow(q, ss._ivfpq_books(coarse, rcb)).collect())
     )
     assert len(a) == emb.count() * 8
     assert a == b
@@ -395,8 +395,9 @@ def test_ivfpq_refine_recovers_exact_topk_within_probed_lists(spark):
         F.col("vec_id").alias("query_id"), ss._q64("embedding").alias("q_qe")
     )
     big_c = emb_df.count()  # candidate pool = everything PQ can see
-    cand = ss._ivfpq_search_relations(
-        coarse, rcb, codes, qv, big_c, ss._IVFPQ_NPROBE
+    cand = ss._ivfpq_search_codes(
+        codes, ss._ivfpq_books(coarse, rcb), emb.filter(F.col("vec_id") < 3),
+        big_c, ss._IVFPQ_NPROBE
     )
     pool = {
         (r["query_id"], r["vec_id"]) for r in cand.collect()
